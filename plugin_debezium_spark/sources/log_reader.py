@@ -10,12 +10,30 @@ pruning, so a resume never rescans applied history.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from plugin_debezium_spark.models import envelope_log_schema
 
-def read_log(spark: SparkSession, log_dir: str) -> DataFrame:
-    return spark.read.parquet(log_dir)
+
+def read_log(
+    spark: SparkSession, log_dir: str, buckets: list[int] | None = None
+) -> DataFrame:
+    """The log under the fixed envelope schema (models.envelope_log_schema,
+    the contract stream_log reads under too): no parquet footer is read
+    to infer a schema, and files lacking a nullable column read it as
+    null. ``buckets`` scopes the read to those ``lsn_bucket=<b>``
+    directories — only they are listed, never the whole log — with
+    ``basePath`` keeping ``lsn_bucket`` a partition column. None reads
+    the log root."""
+    reader = spark.read.schema(envelope_log_schema())
+    if buckets is None:
+        return reader.parquet(log_dir)
+    return reader.option("basePath", log_dir).parquet(
+        *[os.path.join(log_dir, f"lsn_bucket={int(b)}") for b in buckets]
+    )
 
 
 def read_after(spark: SparkSession, log_dir: str, last_lsn: int) -> DataFrame:
@@ -105,7 +123,6 @@ def _bucket_stats(log_dir: str, last_lsn: int) -> list[tuple[int, int, int]]:
     drops the GIL): planning cost is max-per-bucket, not
     sum-over-buckets — the driver-side metadata walk stops being a
     serial tax as buckets/files grow."""
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
@@ -157,6 +174,20 @@ def _bucket_stats(log_dir: str, last_lsn: int) -> list[tuple[int, int, int]]:
     return sorted(out)
 
 
+def _footer_columns(log_dir: str, buckets: list[int]) -> list[str]:
+    """Top-level columns of the first parquet file in ``buckets``, from
+    its footer alone (the fixed read schema names every envelope column,
+    so only a file says which ones the log actually carries)."""
+    import pyarrow.parquet as pq
+
+    for b in buckets:
+        d = os.path.join(log_dir, f"lsn_bucket={int(b)}")
+        for f in sorted(os.listdir(d)):
+            if f.endswith(".parquet"):
+                return pq.read_schema(os.path.join(d, f)).names
+    return []
+
+
 def align_epochs_to_transactions(
     spark: SparkSession, log_dir: str, epochs: list[dict]
 ) -> list[dict]:
@@ -173,7 +204,7 @@ def align_epochs_to_transactions(
     the imported log. A boundary ``hi`` therefore splits a
     transaction iff the transaction containing the last event ≤ hi
     extends past hi, which is detectable from the BOUNDARY buckets
-    alone: one partition-pruned job over the closing bucket of each
+    alone: one bucket-scoped read of the closing bucket of each
     epoch and the opening bucket of its successor aggregates per-tx
     (min, max) LSN; the straddlers (at most one per boundary under
     contiguity) are collected — a tiny result — and each affected
@@ -202,21 +233,20 @@ def align_epochs_to_transactions(
         return epochs
     import warnings
 
-    if "transaction" not in read_log(spark, log_dir).columns:
+    his = [int(e["hi"]) for e in epochs[:-1]]
+    window = sorted(
+        {int(epochs[i]["buckets"][-1]) for i in range(len(epochs) - 1)}
+        | {int(epochs[i + 1]["buckets"][0]) for i in range(len(epochs) - 1)}
+    )
+    if "transaction" not in _footer_columns(log_dir, window):
         warnings.warn(
             "tx_align requested but the log has no 'transaction' "
             "column — boundaries left unaligned",
             stacklevel=2,
         )
         return epochs
-    his = [int(e["hi"]) for e in epochs[:-1]]
-    window = sorted(
-        {int(epochs[i]["buckets"][-1]) for i in range(len(epochs) - 1)}
-        | {int(epochs[i + 1]["buckets"][0]) for i in range(len(epochs) - 1)}
-    )
     tx = (
-        read_log(spark, log_dir)
-        .filter(F.col("lsn_bucket").isin(window))
+        read_log(spark, log_dir, window)
         .filter(F.col("transaction.id").isNotNull())
         .groupBy(F.col("transaction.id").alias("_tx"))
         .agg(F.min("lsn").alias("_lo"), F.max("lsn").alias("_hi"))
@@ -293,10 +323,6 @@ def read_range(
     hi_inclusive: int,
     buckets: list[int] | None = None,
 ) -> DataFrame:
-    df = read_log(spark, log_dir)
-    if buckets is not None:
-        # partition pruning: only the named lsn_bucket dirs are listed
-        df = df.filter(F.col("lsn_bucket").isin([int(b) for b in buckets]))
-    return df.filter(
+    return read_log(spark, log_dir, buckets).filter(
         (F.col("lsn") > F.lit(lo_exclusive)) & (F.col("lsn") <= F.lit(hi_inclusive))
     )

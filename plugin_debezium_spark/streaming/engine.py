@@ -34,7 +34,11 @@ from plugin_debezium_spark.functions.hashing import content_sha256
 from plugin_debezium_spark.models import KEY_COLS, OP_TRUNCATE, base_schema
 from plugin_debezium_spark.operators.dedupe import latest_by_key
 from plugin_debezium_spark.operators.filters import drop_ddl, include_exclude
-from plugin_debezium_spark.operators.metrics import epoch_lineage, stream_counts
+from plugin_debezium_spark.operators.metrics import (
+    lineage_aggs,
+    lineage_table,
+    streams_table,
+)
 from plugin_debezium_spark.plans.lake import LakeTable
 from plugin_debezium_spark.plans.merge import merge_batch
 from plugin_debezium_spark.sources.log_reader import (
@@ -390,13 +394,6 @@ def prepare_latest(
     """
     from plugin_debezium_spark.plans.lake import bucket_expr
 
-    def _persist(df: DataFrame) -> DataFrame:
-        if os.environ.get("SPARK_GRAFT_CACHE_SER", "0") == "1":
-            from pyspark import StorageLevel
-
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
-        return df.cache()
-
     nb = table.current().n_buckets
     base_cols = [
         F.col("key.repo").alias("repo"),
@@ -444,12 +441,13 @@ def prepare_latest(
             # sources/debezium_json.import_to_log enforces it on import) —
             # a duplicate lsn could smuggle another key's loser through
             # this semi-join.
-            latest = _persist(
+            latest = (
                 events.join(F.broadcast(winner_lsns), "lsn", "left_semi")
                 .select(
                     *base_cols, F.parse_json(F.col("after_json")).alias("_av")
                 )
                 .withColumn("_bucket", bucket_expr(KEY_COLS, nb))
+                .cache()
             )
             # released with the epoch (apply's finally unpersists both)
             latest._winner_lsns = pass1
@@ -459,14 +457,12 @@ def prepare_latest(
     work = events.select(
         *base_cols, F.parse_json(F.col("after_json")).alias("_av")
     ).withColumn("_bucket", bucket_expr(KEY_COLS, nb))
-    return _persist(
-        latest_by_key(
-            work, KEY_COLS, cfg.n_salts, extra_sums={"_raw_stream": raw_stream}
-        )
-    )
+    return latest_by_key(
+        work, KEY_COLS, cfg.n_salts, extra_sums={"_raw_stream": raw_stream}
+    ).cache()
 
 
-def _epoch_agg(latest: DataFrame):
+def _epoch_agg(latest: DataFrame, lineage: bool):
     """ONE action over the winner set: materializes the cache AND
     computes schema inference + the touched-bucket set + key count +
     truncate point + snapshot-phase flag together (no separate
@@ -477,7 +473,8 @@ def _epoch_agg(latest: DataFrame):
     t_lsn rides the same action: TRUNCATE rows (op='t', null key)
     group under the null key in the dedupe, so the max-'t' LSN of
     the epoch survives into `latest` — zero extra jobs when the
-    log carries no truncates."""
+    log carries no truncates. So do the lineage and stream-set
+    aggregates _write_metrics writes from, when ``lineage``."""
     aggs = [
         F.expr("schema_of_variant_agg(_av)").alias("s"),
         F.collect_set("_bucket").alias("bs"),
@@ -493,6 +490,8 @@ def _epoch_agg(latest: DataFrame):
         # consumed-event counter carried through the one-pass dedupe
         # (the two-pass path delivers it via latest._n_raw_stream)
         aggs.append(F.sum("_raw_stream").alias("n_raw_stream"))
+    if lineage:
+        aggs += lineage_aggs(latest)
     return latest.agg(*aggs).collect()[0]
 
 
@@ -521,7 +520,7 @@ def _apply_epoch_variant(
     cfg: EngineConfig,
     epoch_id: int,
     hi: int,
-    events: DataFrame,
+    events: DataFrame | None,
     n_events: int | None = None,
     prepared: DataFrame | None = None,
     epoch_key: str = "last_epoch_id",
@@ -536,6 +535,9 @@ def _apply_epoch_variant(
     3. decode winners via a variant→struct cast, sha256 winners only,
     4. merge_prepared writes survivors (no shuffle, broadcast
        anti-join) + upserts (one bucket shuffle), commits atomically.
+
+    ``events`` may be None when ``prepared`` (the pipelined loop's
+    prefetched winner set) is given.
     """
     from plugin_debezium_spark.plans.lake import bucket_expr
     from plugin_debezium_spark.plans.merge import merge_prepared
@@ -551,7 +553,7 @@ def _apply_epoch_variant(
         # (hidden under the previous epoch's merge) — see _epoch_agg
         agg = getattr(latest, "_agg", None)
         if agg is None:
-            agg = _epoch_agg(latest)
+            agg = _epoch_agg(latest, cfg.write_metrics)
         t1 = time.time()
         t_lsn = (
             int(agg["t_lsn"])
@@ -617,7 +619,7 @@ def _apply_epoch_variant(
         stats["n_stream"] = int(raw)
         stats["n_winners_stream"] = int(agg["n_stream"])
         if cfg.write_metrics and not stats.get("skipped"):
-            _write_metrics(cfg, latest, epoch_id)
+            _write_metrics(cfg, latest, epoch_id, agg)
         return stats
     finally:
         latest.unpersist()
@@ -677,23 +679,38 @@ def _apply_epoch_json(
         stats["has_stream"] = has_stream
         stats["n_stream"] = int(row["n_stream"])
         if cfg.write_metrics and not stats.get("skipped"):
-            _write_metrics(cfg, work, epoch_id)
+            _write_metrics(
+                cfg, work, epoch_id, work.agg(*lineage_aggs(work)).collect()[0]
+            )
         return stats
     finally:
         work.unpersist()
 
 
-def _write_metrics(cfg: EngineConfig, df: DataFrame, epoch_id: int) -> None:
-    """Lineage + per-stream counters, idempotent per epoch dir. On the
+def _write_metrics(cfg: EngineConfig, df: DataFrame, epoch_id: int, agg) -> None:
+    """Lineage + per-stream counters, idempotent per epoch dir, from the
+    operators.metrics.lineage_aggs columns of ``agg`` (an action over
+    ``df`` that already ran): the driver writes the few rows itself, so
+    no Spark job runs unless the epoch spans several streams. On the
     variant path the input is the deduped batch (winner lineage); the
     json path records raw-event lineage."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
     mdir = os.path.join(cfg.table_dir, "metrics")
-    epoch_lineage(df, epoch_id).write.mode("overwrite").parquet(
-        os.path.join(mdir, "lineage", f"epoch={epoch_id}")
-    )
-    stream_counts(df).withColumn("epoch_id", F.lit(epoch_id)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(mdir, "streams", f"epoch={epoch_id}"))
+    for name, rows in (
+        ("lineage", lineage_table(agg, epoch_id)),
+        ("streams", streams_table(agg, df, epoch_id)),
+    ):
+        d = os.path.join(mdir, name, f"epoch={epoch_id}")
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        # readers skip dot-files, so a crash mid-write leaves no
+        # half-written part file behind
+        tmp = os.path.join(d, ".part-00000.parquet.tmp")
+        pq.write_table(rows, tmp)
+        os.replace(tmp, os.path.join(d, "part-00000.parquet"))
 
 
 def run(spark: SparkSession, cfg: EngineConfig) -> dict:
@@ -791,9 +808,9 @@ def _drain(
         def _prefetch(ep) -> DataFrame:
             d = prepare_latest(table, cfg, _events_of(ep), ep.get("n"))
             # one action materializes the cache AND computes the epoch
-            # stats (schema/buckets/count) the apply step needs — the
-            # whole inference pass leaves the critical path
-            d._agg = _epoch_agg(d)
+            # stats (schema/buckets/count/lineage) the apply step needs
+            # — the whole inference pass leaves the critical path
+            d._agg = _epoch_agg(d, cfg.write_metrics)
             return d
 
         with ThreadPoolExecutor(max_workers=1) as ex:
@@ -821,7 +838,7 @@ def _drain(
                         cfg,
                         next_epoch + i,
                         ep["hi"],
-                        _events_of(ep),
+                        None,  # prepared already holds the epoch's rows
                         ep.get("n"),
                         prepared=prepared,
                     ),

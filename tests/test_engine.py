@@ -8,6 +8,7 @@ import pytest
 
 from plugin_debezium_spark.plans.lake import LakeTable
 from plugin_debezium_spark.sources.genlog import LogSpec, write_log
+from plugin_debezium_spark.sources.log_reader import plan_epochs
 from plugin_debezium_spark.streaming.engine import EngineConfig, run
 from tests.golden import golden_key_hashes, read_log_pandas
 
@@ -206,6 +207,58 @@ def test_metrics_lineage_written(spark, log_dir, tmp_path):
     )
     assert lineage.count() > 0
     assert {"op", "n_events", "lsn_lo", "lsn_hi"}.issubset(set(lineage.columns))
+    # values: winner lineage of epoch 0, recomputed from the raw log
+    ep = plan_epochs(spark, log_dir, -1, 1_000)[0]
+    pdf = read_log_pandas(log_dir)
+    pdf = pdf[(pdf["lsn"] > ep["lo"]) & (pdf["lsn"] <= ep["hi"])]
+    pdf = pdf.assign(
+        repo=pdf["key"].map(lambda k: k["repo"]),
+        path=pdf["key"].map(lambda k: k["path"]),
+        commit=pdf["key"].map(lambda k: k["commit"]),
+        stream=pdf["source"].map(lambda s: f"{s['db']}.{s['table']}"),
+    )
+    winners = pdf.sort_values("lsn").groupby(
+        ["repo", "path", "commit"], dropna=False
+    ).tail(1)
+    want = sorted(
+        (op, len(g), int(g["lsn"].min()), int(g["lsn"].max()),
+         g["repo"].nunique(), 0)
+        for op, g in winners.groupby("op")
+    )
+    got = sorted(
+        tuple(r)
+        for r in lineage.select(
+            "op", "n_events", "lsn_lo", "lsn_hi", "n_repos", "epoch_id"
+        ).collect()
+    )
+    assert got == want
+    streams = spark.read.parquet(
+        os.path.join(table_dir, "metrics", "streams", "epoch=0")
+    )
+    assert sorted(tuple(r) for r in streams.collect()) == sorted(
+        (s, len(g), 0) for s, g in winners.groupby("stream")
+    )
+
+
+def test_log_without_optional_columns_replays(spark, log_dir, tmp_path):
+    """models.envelope_log_schema's nullable-column contract: a log
+    whose files lack message_json and epoch_hint replays under the
+    fixed read schema to the golden table."""
+    old = str(tmp_path / "oldlog")
+    spark.read.parquet(log_dir).drop("message_json", "epoch_hint").write.partitionBy(
+        "lsn_bucket"
+    ).parquet(old)
+    cols = set(spark.read.parquet(old).columns)
+    assert not cols & {"message_json", "epoch_hint"}
+    table_dir = str(tmp_path / "tbl")
+    out = run(
+        spark,
+        EngineConfig(log_dir=old, table_dir=table_dir, max_events_per_batch=1_000),
+    )
+    assert out["batches_applied"] >= 3
+    assert _final_hashes(spark, table_dir) == golden_key_hashes(
+        read_log_pandas(old)
+    )
 
 
 # --- TRUNCATE semantics (reference ChangeConsumer.java:262-274) -----------
@@ -221,6 +274,63 @@ def trunc_log_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("trunc_log"))
     write_log(spark, d, TRUNC_SPEC)
     return d
+
+
+def test_lineage_rows_match_metrics_operators(
+    spark, trunc_log_dir, tmp_path, monkeypatch
+):
+    """The lineage and stream rows written from the stats action equal
+    operators.metrics.epoch_lineage/stream_counts over the same cached
+    winners, on a log with TRUNCATE events and two source tables: one
+    epoch sees only table a, one both, one only b."""
+    from pyspark.sql import functions as F
+
+    import plugin_debezium_spark.streaming.engine as engine
+    from plugin_debezium_spark.operators.metrics import (
+        epoch_lineage,
+        stream_counts,
+    )
+
+    log = str(tmp_path / "log")
+    src = spark.read.parquet(trunc_log_dir)
+    src.withColumn(
+        "source",
+        F.col("source").withField(
+            "table", F.when(F.col("lsn") < 1_500, "a").otherwise("b")
+        ),
+    ).write.partitionBy("lsn_bucket").parquet(log)
+    want = {}
+    write_metrics = engine._write_metrics
+
+    def rows(d):
+        return d.dtypes, sorted(tuple(r) for r in d.collect())
+
+    def spy(cfg, df, epoch_id, agg):
+        want[epoch_id] = (
+            rows(epoch_lineage(df, epoch_id)),
+            rows(stream_counts(df).withColumn("epoch_id", F.lit(epoch_id))),
+        )
+        return write_metrics(cfg, df, epoch_id, agg)
+
+    monkeypatch.setattr(engine, "_write_metrics", spy)
+    table_dir = str(tmp_path / "tbl")
+    out = run(
+        spark,
+        EngineConfig(log_dir=log, table_dir=table_dir, max_events_per_batch=1_000),
+    )
+    assert out["batches_applied"] == len(want) == 3
+    for epoch_id, expected in want.items():
+        got = tuple(
+            rows(
+                spark.read.parquet(
+                    os.path.join(table_dir, "metrics", name, f"epoch={epoch_id}")
+                )
+            )
+            for name in ("lineage", "streams")
+        )
+        assert got == expected, epoch_id
+    assert [len(w[1][1]) for w in want.values()] == [1, 2, 1]
+    assert all(any(r[0] == "t" for r in w[0][1]) for w in want.values())
 
 
 def test_truncate_matches_golden(spark, trunc_log_dir, tmp_path):

@@ -5,6 +5,7 @@ broadcast) fail loudly."""
 
 import contextlib
 import io
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,6 +43,45 @@ def test_bucket_partition_pruning(spark, log_dir):
     assert "lsn_bucket" in plan
     # ...and it actually reduces files read
     assert pruned.count() < full.count()
+
+
+def test_epoch_read_is_bucket_scoped_and_runs_no_job(spark, log_dir):
+    """Building an epoch's events frame lists only its planned bucket
+    directories and reads no footer: no Spark job (schema inference or
+    parallel listing) runs, and every input file lies in a planned
+    bucket."""
+    from plugin_debezium_spark.sources.log_reader import plan_epochs
+    from plugin_debezium_spark.streaming.engine import (
+        EngineConfig,
+        filter_events,
+    )
+
+    epoch = plan_epochs(spark, log_dir, -1, 500)[1]
+    cfg = EngineConfig(log_dir=log_dir, table_dir=f"{log_dir}-unused")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("epoch-read-guard", "build one epoch's events frame")
+    try:
+        events = filter_events(
+            cfg,
+            read_range(spark, log_dir, epoch["lo"], epoch["hi"], epoch["buckets"]),
+        )
+        files = events.inputFiles()
+        # sentinel job: the status listener sees jobs in submission
+        # order, so once it shows up, any job the build ran has too
+        sc.setJobGroup("epoch-read-sentinel", "sentinel")
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("epoch-read-sentinel"):
+        assert time.time() < deadline, "sentinel job never reported"
+        time.sleep(0.1)
+    assert list(tracker.getJobIdsForGroup("epoch-read-guard")) == []
+    planned = {f"lsn_bucket={b}" for b in epoch["buckets"]}
+    assert files
+    assert {f.rsplit("/", 2)[-2] for f in files} <= planned
+    assert all(log_dir in f for f in files)
 
 
 def test_column_pruning_reaches_scan(spark, log_dir):
